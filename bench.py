@@ -30,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from game_data_etl_pipeline_spark import registry  # noqa: E402
-from game_data_etl_pipeline_spark.session import get_spark  # noqa: E402
+from game_data_etl_pipeline_spark.session import cpus, get_spark  # noqa: E402
 
 # v2 suite (round 6): the r4-frozen 23-query suite stays untouched for
 # cross-round continuity (its total remains the headline "value"); v2
@@ -123,16 +123,10 @@ V2_EXTRA = (
 # judge (the round-6 adjudication: a uniform ~1.7x "slowdown" that was
 # entirely hardware). Update each round after the driver records
 # BENCH_r{N}.json.
-# r15 note: reseeded from the DRIVER artifact BENCH_r15.json — the
-# first driver-parsed artifact since r8 (the r15 tail-ordering fix
-# worked), so the reseed convention finally reads the driver's own
-# numbers: raw frozen total_min 18.192 s with probes py 0.6749 /
-# jvm 0.4709. Seeded into the fixed r8 frame under EACH probe
-# separately (jvm 18.192/2.0717 = 8.7811; py 18.192/1.1576 = 15.7148)
-# and total_ratio reported per chain. The r15 chains DISAGREED
-# (probe_disagreement True — the r15 host's jvm probe ran 1.53x the
-# r14 frame while py sat flat), so r16 ratios must be quoted as the
-# [jvm, py] band, not either number alone.
+# Seeded from the recorded artifact BENCH_r15.json (raw frozen total_min
+# 18.192 s, probes py 0.6749 / jvm 0.4709) into the fixed r8 frame under
+# EACH probe separately (jvm 18.192/2.0717 = 8.7811; py 18.192/1.1576 =
+# 15.7148); the r15 chains disagreed, so quote ratios as the band.
 PREV = {
     "round": 15,
     "frozen_total_min_jvm_frame": 8.7811,
@@ -157,16 +151,14 @@ def _calibration(spark) -> dict:
       — JVM whole-stage-codegen throughput across all local cores.
     To compare round A to round B, divide suite totals by the ratio of
     their probes."""
-    import statistics as _st
-    import time as _t
 
     def _med(fn):
         out = []
         for _ in range(3):
-            t0 = _t.perf_counter()
+            t0 = time.perf_counter()
             fn()
-            out.append(_t.perf_counter() - t0)
-        return round(_st.median(out), 4)
+            out.append(time.perf_counter() - t0)
+        return round(statistics.median(out), 4)
 
     def _py():
         x = 0
@@ -202,129 +194,35 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # Resolve $SPARK_GRAFT_CPUS HERE and pin the master explicitly
-    # (r15 verdict item 2): session.py's `SPARK_MASTER not in environ`
-    # guard left the bench session's core count to the environment,
-    # and the r15 driver's cpus=8 run provably came up on 32 cores.
-    # The bench is always a local-mode measurement session, so an
-    # explicit local[cpus] master is correct by contract; cluster
-    # deployments run the package, not bench.py.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cpus = max(1, int(cpus_env)) if cpus_env else (os.cpu_count() or 4)
+    # the bench is always a local-mode measurement session: pin an
+    # explicit local[cpus] master (r15 verdict item 2)
+    n_cpus = cpus()
     spark = get_spark(
         "bench",
         extra_conf={
-            "spark.master": f"local[{cpus}]",
-            "spark.sql.shuffle.partitions": str(cpus),
+            "spark.master": f"local[{n_cpus}]",
+            "spark.sql.shuffle.partitions": str(n_cpus),
         },
     )
+    # an already-active session silently ignores the pinned master
+    master = spark.sparkContext.master
+    if master != f"local[{n_cpus}]":
+        raise RuntimeError(f"bench session runs on {master}, not local[{n_cpus}]")
     specs = registry.headline_specs()
 
     # warm-up: session init, codegen, parquet footer reads
     warm = specs.get("q_revenue_by_region") or next(iter(specs.values()))
     warm.fn(spark, sf_dir).count()
     calibration = _calibration(spark)
-    # materialize the bucketed sink layout outside the timed region:
-    # bucketing pays its shuffle at WRITE time by design, and the
-    # benched number should measure the repeated co-located join,
-    # not the one-time layout cost it amortizes
-    if "op_join_bucketed" in specs:
-        from game_data_etl_pipeline_spark.operators.scale import _bucketed_tables
-
-        _bucketed_tables(spark, sf_dir)
-    # same precedent for the ANN index: the serve ops' benched number
-    # should measure query-time against the persisted artifact, not
-    # the one-time build it amortizes (op_sim_ivfpq still times the
-    # train-inline form each rep, so both costs stay visible)
-    if any(n in V2_EXTRA for n in ("op_sim_ivfpq_serve", "q_retrieval_pipeline_ann")):
-        from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
-
-        build_ann_index(spark, sf_dir)
-    if "op_text_bm25_serve" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.lex_index import build_lex_index
-
-        build_lex_index(spark, sf_dir)
-    # r9: the upsert demo trees are the INPUTS of the upsert-serve and
-    # compaction entries — build them outside the timed region so the
-    # benched numbers measure serving / compacting, not input setup
-    if "op_lex_index_upsert" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.lex_index import (
-            ensure_lex_upsert_tree,
-        )
-
-        ensure_lex_upsert_tree(spark, sf_dir)
-    if "op_sim_index_compact" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.ann_index import ensure_upsert_tree
-
-        ensure_upsert_tree(spark, sf_dir)
-    # r11: the bloom serve/upsert entries read persisted filter trees —
-    # built outside the timed region for the same reason (the entries
-    # measure query-time screening, not the one-time builds; the
-    # builds are idempotent so later reps serve either way)
-    if "op_bloom_index_upsert" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            build_bloom_index,
-            ensure_bloom_upsert_tree,
-        )
-
-        build_bloom_index(spark, sf_dir)
-        ensure_bloom_upsert_tree(spark, sf_dir)
-    # r12: the lifecycle-e2e and registry entries serve from persisted
-    # end-state trees — same precedent: the benched number measures
-    # serving (and its in-query referees), not the one-time lineage.
-    # Each prewarm gates on ITS OWN entry so dropping one name never
-    # silently un-warms another's input tree.
-    if "op_sim_lifecycle_e2e" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.ann_index import ensure_ann_e2e_tree
-
-        ensure_ann_e2e_tree(spark, sf_dir)
-    if "op_lex_lifecycle_e2e" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.lex_index import ensure_lex_e2e_tree
-
-        ensure_lex_e2e_tree(spark, sf_dir)
-    if "op_bloom_registry_screen" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import ensure_bloom_registry
-
-        ensure_bloom_registry(spark, sf_dir)
-    if "op_bloom_registry_refresh" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            ensure_bloom_refresh_demo,
-        )
-
-        ensure_bloom_refresh_demo(spark, sf_dir)
-    if "op_bloom_registry_retire" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            ensure_bloom_retire_demo,
-        )
-
-        ensure_bloom_retire_demo(spark, sf_dir)
-    if "op_bloom_registry_lifecycle_e2e" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            ensure_bloom_lifecycle_demo,
-        )
-
-        ensure_bloom_lifecycle_demo(spark, sf_dir)
-    # r15: the merge-policy entry reads the persisted 4-segment base
-    # tree and the merged tree — built outside the timed region so the
-    # benched number measures the policy pass + referees, not the
-    # one-time base layout (idempotent; later reps serve either way)
-    if "op_sim_index_merge_policy" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.ann_index import (
-            ensure_merge_policy_tree,
-        )
-
-        ensure_merge_policy_tree(spark, sf_dir)
-    # r15: the served late-interaction entry reads the persisted token
-    # index — built outside the timed region (the build_ann_index
-    # precedent: serving amortizes the build; op_sim_late_interaction
-    # still times the tokenize-inline form so both costs stay visible)
-    if "op_sim_late_interaction_served" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.retrieval import build_late_index
-
-        build_late_index(spark, sf_dir)
 
     all_specs = registry.all_specs()
     v2_specs = {name: all_specs[name] for name in V2_EXTRA if name in all_specs}
+    # build the persisted layouts the timed queries serve from outside
+    # the timed region: the benched number measures serving, not the
+    # one-time build it amortizes (train-inline forms pay it every rep)
+    for spec in {**specs, **v2_specs}.values():
+        if spec.prepare is not None:
+            spec.prepare(spark, sf_dir)
 
     samples: dict[str, list[float]] = {name: [] for name in {**specs, **v2_specs}}
     # TWO sequential passes, frozen suite first: the first r6 run timed

@@ -28,7 +28,7 @@ precedent (operators/scale.py):
   stage — no Lloyd loop, no localCheckpoint scan, no driver numpy —
   pinned by tests/test_plans.py::test_ivfpq_serve_plan_contract
   (plan has no ExistingRDD operator and reads the ann_index path) and
-  by the _BUILD_COUNT no-rebuild assertion in tests/test_llmdata.py.
+  by the ``artifacts.BUILDS`` no-rebuild assertion in tests/test_plans.py.
 
 Staleness & concurrency: the artifact dir is keyed by the embeddings
 parquet's (size, mtime_ns) fingerprint plus the index format version,
@@ -48,18 +48,13 @@ from __future__ import annotations
 
 import json
 import os
-from pathlib import Path
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
-from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    fingerprint_key,
-    prune_stale_keys,
-    publish_staging,
-    staging_tree,
-)
+from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path, persist
 from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_PROBES,
     PQ_KSUB,
@@ -82,17 +77,6 @@ from game_data_etl_pipeline_spark.registry import register
 # 1 -> 2 in lex_index.py).
 INDEX_VERSION = 1
 
-# test hook: op_sim_ivfpq_serve twice in one process must hit the
-# persisted artifact, never retrain (tests/test_llmdata.py)
-_BUILD_COUNT = 0
-
-
-def _index_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "ann_index"),
-    )
-
 
 def ann_index_dir(sf_dir: str) -> str:
     """Artifact dir for one fixture: keyed by the embeddings file's
@@ -100,8 +84,7 @@ def ann_index_dir(sf_dir: str) -> str:
     path gets a FRESH index — the stale-index failure mode of
     path-only keying (pinned by
     tests/test_llmdata.py::test_index_fingerprint_staleness)."""
-    key = fingerprint_key(sf_dir, "embeddings.parquet")
-    return os.path.join(_index_root(), f"v{INDEX_VERSION}", key)
+    return artifact_path("ann_index", "", INDEX_VERSION, sf_dir, "embeddings.parquet")
 
 
 def build_ann_index(spark: SparkSession, sf_dir: str, *, force: bool = False) -> str:
@@ -115,18 +98,13 @@ def build_ann_index(spark: SparkSession, sf_dir: str, *, force: bool = False) ->
     assignment, one bounded groupBy(vec_id) encode, and one shuffle
     on cent_id to lay the postings out as the inverted file. All paid
     ONCE per corpus snapshot."""
-    global _BUILD_COUNT
-    final = ann_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")) and not force:
-        return final
-    _BUILD_COUNT += 1
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    coarse = ivf_trained_centroids(spark, sf_dir)
-    pq = pq_train(emb)
-    cells = ivf_assign(emb, cents=coarse, form="argmax").select("vec_id", "cent_id")
-    postings = pq_encode(emb, pq).join(cells, "vec_id")
 
-    with staging_tree(final) as staging:
+    def write(staging: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        coarse = ivf_trained_centroids(spark, sf_dir)
+        pq = pq_train(emb)
+        cells = ivf_assign(emb, cents=coarse, form="argmax").select("vec_id", "cent_id")
+        postings = pq_encode(emb, pq).join(cells, "vec_id")
         coarse.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "coarse"))
         pq.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "codebooks"))
         (
@@ -135,21 +113,12 @@ def build_ann_index(spark: SparkSession, sf_dir: str, *, force: bool = False) ->
             .partitionBy("cent_id")
             .parquet(os.path.join(staging, "postings"))
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": INDEX_VERSION,
-                    "pq_m": PQ_M,
-                    "pq_ksub": PQ_KSUB,
-                    "source": sf_dir,
-                },
-                f,
-            )
-        # atomic publish (force renames the live tree aside, never rmtree
-        # in place) + GC of superseded fingerprints for this fixture
-        publish_staging(staging, final, marker="meta.json", force=force)
-    prune_stale_keys(final, sf_dir)
-    return final
+
+    meta = {"pq_m": PQ_M, "pq_ksub": PQ_KSUB, "source": sf_dir}
+    return persist(
+        "ann_index", "", INDEX_VERSION, sf_dir, "embeddings.parquet",
+        marker="meta.json", meta=meta, write=write, force=force,
+    )
 
 
 def read_ann_index(
@@ -218,6 +187,7 @@ def serve_with_adc_referee(
 @register(
     "op_sim_index_build",
     tags=("llm", "similarity", "index"),
+    prepare=(build_ann_index,),
     oracle="""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_indexed,
                CAST(16 AS BIGINT) AS pq_m,
@@ -298,6 +268,7 @@ def op_sim_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_sim_ivfpq_serve",
     tags=("llm", "similarity", "index"),
+    prepare=(build_ann_index,),
     oracle="""
         WITH q AS (
             SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
@@ -357,21 +328,15 @@ def ensure_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     partitionOverwriteMode would double-count. The published tree has
     exactly TWO segments per non-empty cell (one per write) — the
     segment shape op_sim_index_compact merges."""
-    demo = os.path.join(
-        _index_root(),
-        f"upsert_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(os.path.join(demo, "upsert_done.json")):
-        return demo
-    main_path = build_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
-    books = spark.read.parquet(os.path.join(main_path, "codebooks"))
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    split = emb.agg(
-        F.expr("max(vec_id) * 4 div 5").cast("long").alias("split")
-    ).localCheckpoint(eager=True)
-    with staging_tree(demo) as staging:
+
+    def write(staging: str) -> None:
+        main_path = build_ann_index(spark, sf_dir)
+        coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
+        books = spark.read.parquet(os.path.join(main_path, "codebooks"))
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        split = emb.agg(
+            F.expr("max(vec_id) * 4 div 5").cast("long").alias("split")
+        ).localCheckpoint(eager=True)
         main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
             "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
         )
@@ -400,16 +365,17 @@ def ensure_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("cent_id")
             .parquet(os.path.join(staging, "postings"))
         )
-        with open(os.path.join(staging, "upsert_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION}, f)
-        publish_staging(staging, demo, marker="upsert_done.json")
-    prune_stale_keys(demo, sf_dir)
-    return demo
+
+    return persist(
+        "ann_index", "upsert", INDEX_VERSION, sf_dir, "embeddings.parquet",
+        marker="upsert_done.json", meta={}, write=write,
+    )
 
 
 @register(
     "op_sim_index_upsert",
     tags=("llm", "similarity", "index"),
+    prepare=(build_ann_index, ensure_upsert_tree),
     oracle="""
         WITH b AS (
             SELECT (MAX(vec_id) * 4) // 5 AS split FROM embeddings
@@ -851,29 +817,21 @@ def ensure_compact_tree(spark: SparkSession, sf_dir: str) -> str:
     audits the rewrite) and op_sim_ivfpq_serve_compacted (which
     SERVES from it under a value-level oracle)."""
     demo = ensure_upsert_tree(spark, sf_dir)
-    comp = os.path.join(
-        _index_root(),
-        f"compact_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(
-        os.path.join(comp, "compact_done.json")
-    ) and purge_ledger_current(comp, os.path.join(comp, "postings")):
-        return comp
-    with staging_tree(comp) as staging:
-        compact_ann_postings(
+    return persist(
+        "ann_index", "compact", INDEX_VERSION, sf_dir, "embeddings.parquet",
+        marker="compact_done.json",
+        meta={"tomb_mod": TOMB_MOD},
+        write=lambda staging: compact_ann_postings(
             spark, os.path.join(demo, "postings"), os.path.join(staging, "postings")
-        )
-        with open(os.path.join(staging, "compact_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION, "tomb_mod": TOMB_MOD}, f)
-        publish_staging(staging, comp, marker="compact_done.json")
-    prune_stale_keys(comp, sf_dir)
-    return comp
+        ),
+        current=lambda p: purge_ledger_current(p, os.path.join(p, "postings")),
+    )
 
 
 @register(
     "op_sim_index_compact",
     tags=("llm", "similarity", "index"),
+    prepare=(ensure_compact_tree,),
     oracle="""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_before,
                CAST(COUNT(*) FILTER (WHERE vec_id % 17 = 3) AS BIGINT) AS n_tombstoned,
@@ -976,6 +934,7 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_sim_ivfpq_serve_compacted",
     tags=("llm", "similarity", "index"),
+    prepare=(build_ann_index, ensure_compact_tree),
     # op_sim_ivfpq_serve's oracle RE-DERIVED over the surviving corpus
     # (embeddings WHERE vec_id % 17 != 3): after deletes + compaction
     # the index must serve the survivor world, per-query values and all
@@ -1064,28 +1023,19 @@ def ensure_ann_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     ONE segment per cell. Staged + atomically published + superseded
     keys pruned; the upsert tree stays live throughout."""
     demo = ensure_upsert_tree(spark, sf_dir)
-    e2e = os.path.join(
-        _index_root(),
-        f"e2e_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if (
-        os.path.isfile(os.path.join(e2e, "e2e_done.json"))
-        and tomb_ids_current(e2e, "e2e_done.json")
-        and purge_ledger_current(e2e, os.path.join(e2e, "postings"))
-    ):
-        return e2e
-    with staging_tree(e2e) as staging:
-        compact_ann_postings(
+    e2e = persist(
+        "ann_index", "e2e", INDEX_VERSION, sf_dir, "embeddings.parquet",
+        marker="e2e_done.json",
+        meta={"tomb_ids": list(TOMB_IDS)},
+        write=lambda staging: compact_ann_postings(
             spark,
             os.path.join(demo, "postings"),
             os.path.join(staging, "postings"),
             tombstones=tombstone_ids_df(spark, "vec_id"),
-        )
-        with open(os.path.join(staging, "e2e_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION, "tomb_ids": list(TOMB_IDS)}, f)
-        publish_staging(staging, e2e, marker="e2e_done.json")
-    prune_stale_keys(e2e, sf_dir)
+        ),
+        current=lambda p: tomb_ids_current(p, "e2e_done.json")
+        and purge_ledger_current(p, os.path.join(p, "postings")),
+    )
     check_tomb_meta(e2e, "e2e_done.json")  # post-publish invariant
     return e2e
 
@@ -1093,6 +1043,7 @@ def ensure_ann_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_sim_lifecycle_e2e",
     tags=("llm", "similarity", "index"),
+    prepare=(build_ann_index, ensure_ann_e2e_tree),
     # op_sim_ivfpq_serve's oracle re-derived over the NET corpus of the
     # composed lifecycle — every corpus vector upserted, the TOMB_IDS
     # purge list removed — plus the three audit literals. The id list
@@ -1329,20 +1280,13 @@ def ensure_merge_base_tree(spark: SparkSession, sf_dir: str) -> str:
     policy, the referees, and the DuckDB oracle all read the same
     fact. One file per (seg, cell): the repartition matches the
     partitionBy, so file counts are the segment counts."""
-    base = os.path.join(
-        _index_root(),
-        f"mergebase_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(os.path.join(base, "merge_base_done.json")):
-        return base
-    main_path = build_ann_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    bounds = _merge_bounds(emb)
-    postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
-    with staging_tree(base) as staging:
+
+    def write(staging: str) -> None:
+        main_path = build_ann_index(spark, sf_dir)
+        bounds = _merge_bounds(load_table(spark, sf_dir, "embeddings").select("vec_id"))
+        postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
+            "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
+        )
         (
             postings.join(F.broadcast(bounds))
             .withColumn("seg", _merge_seg_expr())
@@ -1352,11 +1296,11 @@ def ensure_merge_base_tree(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("seg", "cent_id")
             .parquet(os.path.join(staging, "postings"))
         )
-        with open(os.path.join(staging, "merge_base_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION, "n_segments": 4}, f)
-        publish_staging(staging, base, marker="merge_base_done.json")
-    prune_stale_keys(base, sf_dir)
-    return base
+
+    return persist(
+        "ann_index", "mergebase", INDEX_VERSION, sf_dir, "embeddings.parquet",
+        marker="merge_base_done.json", meta={"n_segments": 4}, write=write,
+    )
 
 
 def _seg_dir_digests(postings_dir: str, segs) -> dict[str, str]:
@@ -1396,29 +1340,19 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
     merge that deletes nothing but must prove it moved (and only
     moved) what the policy chose."""
     base = ensure_merge_base_tree(spark, sf_dir)
-    dest = os.path.join(
-        _index_root(),
-        f"mergepolicy_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(os.path.join(dest, "merge_done.json")) and os.path.isfile(
-        os.path.join(dest, "postings", MERGE_MANIFEST)
-    ):
-        return dest
-    src_postings = os.path.join(base, "postings")
-    src = spark.read.parquet(src_postings).select(
-        "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
-    )
-    seg_rows = {
-        int(r["seg"]): int(r["n"])
-        for r in src.groupBy("seg").agg(F.count(F.lit(1)).alias("n")).collect()
-    }  # bounded collect: one row per segment (4 here), never data
-    picked = pick_size_tiered(seg_rows, MERGE_POLICY_K)
-    untouched = sorted(s for s in seg_rows if s not in picked)
-    new_seg = max(seg_rows) + 1
-    import shutil as _sh
 
-    with staging_tree(dest) as staging:
+    def write(staging: str) -> None:
+        src_postings = os.path.join(base, "postings")
+        src = spark.read.parquet(src_postings).select(
+            "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
+        )
+        seg_rows = {
+            int(r["seg"]): int(r["n"])
+            for r in src.groupBy("seg").agg(F.count(F.lit(1)).alias("n")).collect()
+        }  # bounded collect: one row per segment (4 here), never data
+        picked = pick_size_tiered(seg_rows, MERGE_POLICY_K)
+        untouched = sorted(s for s in seg_rows if s not in picked)
+        new_seg = max(seg_rows) + 1
         stage_post = os.path.join(staging, "postings")
         (
             src.filter(F.col("seg").isin(*[int(s) for s in picked]))
@@ -1432,7 +1366,7 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
         # through Spark (a rewrite would re-encode row groups and
         # break the byte-identity contract)
         for seg in untouched:
-            _sh.copytree(
+            shutil.copytree(
                 os.path.join(src_postings, f"seg={seg}"),
                 os.path.join(stage_post, f"seg={seg}"),
             )
@@ -1453,16 +1387,20 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
                 },
                 f,
             )
-        with open(os.path.join(staging, "merge_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION}, f)
-        publish_staging(staging, dest, marker="merge_done.json")
-    prune_stale_keys(dest, sf_dir)
-    return dest
+
+    return persist(
+        "ann_index", "mergepolicy", INDEX_VERSION, sf_dir, "embeddings.parquet",
+        marker="merge_done.json",
+        meta={},
+        write=write,
+        current=lambda p: os.path.isfile(os.path.join(p, "postings", MERGE_MANIFEST)),
+    )
 
 
 @register(
     "op_sim_index_merge_policy",
     tags=("llm", "similarity", "index"),
+    prepare=(ensure_merge_policy_tree,),
     # counts replay from the embeddings table through the shared seg
     # CTE (the base tree covers every corpus vector exactly once, the
     # op_sim_index_upsert coverage precedent); the demo's size
@@ -1636,6 +1574,7 @@ def op_sim_index_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_sim_ivfpq_serve_merged",
     tags=("llm", "similarity", "index"),
+    prepare=(build_ann_index, ensure_merge_policy_tree),
     # op_sim_ivfpq_serve's oracle UNCHANGED over the FULL corpus: a
     # merge deletes nothing, so serving from the merged tree must
     # reproduce the main serve path value-for-value (contrast

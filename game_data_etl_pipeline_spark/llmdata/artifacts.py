@@ -1,54 +1,128 @@
-"""Shared lifecycle discipline for persisted index artifacts.
+"""Build-once lifecycle for every persisted index tree.
 
-ann_index.py and lex_index.py both persist fingerprint-keyed artifact
-directories (key = fixture path + (size, mtime_ns) of the source
-parquet). Three failure modes the round-8 review called out live here,
-fixed once for both modules:
+``persist`` owns the whole build-once decision for all 17 fingerprint-
+keyed trees the ANN, lexical, Bloom and late-interaction families keep
+(the main indexes, their upsert/compact/e2e/merge demo trees and the
+Bloom registries). Each build function names its tree and passes the
+Spark work as ``write(staging)``; everything else lives here, once.
 
-- **Publish atomicity**: every artifact tree — including the upsert
-  demo tree, which round 8 wrote in place — is fully built in a
-  ``tempfile.mkdtemp`` staging dir and ``os.rename``d into place.
-  Readers never observe a partial tree; concurrent builders race
-  benignly (rename is atomic within a filesystem, the loser discards
-  its staging dir and reads the winner's deterministic twin).
-- **Force-rebuild atomicity**: ``force=True`` must not ``rmtree`` the
-  live artifact before the replacement exists (a concurrent reader
-  would observe the index vanish mid-query). The old tree is renamed
+- **Layout**: one root, ``$SPARK_GRAFT_INDEX_DIR`` (default
+  ``spark-warehouse/``), holding ``<family>/<kind>_v<N>/<key>`` —
+  ``ann_index/upsert_v1/<key>``, ``lex_index/compact_v2/<key>``, … The
+  family's main index has no kind and lives at ``<family>/v<N>/<key>``.
+  The key is the fixture path plus the (size, mtime_ns) of the source
+  parquet (``fingerprint_key``), so a regenerated fixture at the same
+  path gets a FRESH tree instead of a stale one; the format version
+  ``N`` is bumped on any layout change.
+- **Marker**: the tree's marker file (``meta.json``,
+  ``upsert_done.json``, …) is written LAST into the staging tree, so
+  its presence in a published tree means the tree is complete.
+  ``persist`` returns early when the marker is present and the
+  caller's ``current(path)`` cache-validity test holds (geometry,
+  purge ledger, tombstone list, merge manifest); a failing test may
+  displace the tree, and the tree is rebuilt.
+- **Publish atomicity**: every tree is fully built in a
+  ``tempfile.mkdtemp`` staging dir next to its final path and
+  ``os.rename``d into place. Readers never observe a partial tree;
+  concurrent builders race benignly (the loser discards its staging
+  dir and reads the winner's deterministic twin). A failing build
+  removes its staging dir (``staging_tree``).
+- **Force-rebuild atomicity**: ``force=True`` never ``rmtree``s the
+  live tree before the replacement exists. The old tree is renamed
   aside to a unique trash path first — readers holding the old path
   keep a consistent snapshot until their scan ends — then reaped.
-- **Garbage collection**: fingerprint keying means every fixture
-  regeneration mints a fresh key and orphans the previous artifact;
-  without GC the warehouse grows unboundedly across rounds. After a
-  successful publish, sibling keys for the SAME fixture path are
-  pruned. Matching is by the EXACT key shape
-  ``<flattened path>_<size>_<mtime_ns>`` (anchored regex), not a bare
-  prefix: a prefix match would also claim keys of fixtures whose
-  flattened path merely extends this one (``/data/sf`` vs
-  ``/data/sf/sub`` or ``/data/sf_v2`` all flatten to names starting
-  ``data_sf_``) and delete their LIVE artifacts out from under
-  concurrent readers (round-9 advice). In-flight ``staging_*`` dirs
-  never match the key shape and are left alone.
-- **Trash-dir grace**: force-rebuild trash trees (see above) are
-  reaped by ``prune_stale_keys`` only once they are older than
+- **Garbage collection**: after a successful publish, sibling keys
+  for the SAME fixture path are displaced and later reaped. Matching
+  is by the EXACT key shape ``<flattened path>_<size>_<mtime_ns>``
+  (anchored regex), not a bare prefix: a prefix match would also
+  claim keys of fixtures whose flattened path merely extends this
+  one (``/data/sf`` vs ``/data/sf/sub`` or ``/data/sf_v2`` all
+  flatten to names starting ``data_sf_``) and delete their LIVE
+  trees out from under concurrent readers. In-flight ``staging_*``
+  dirs never match the key shape and are left alone.
+- **Trash-dir grace**: displaced trees are reaped by
+  ``prune_stale_keys`` only once they are older than
   ``TRASH_GRACE_SEC`` — reaping them in the same pass that published
   the replacement would reopen the reader window the rename-aside
-  exists to close. ``force=True`` is therefore safe for readers whose
-  scans finish within the grace period; a reader that holds an old
-  tree longer than that must re-resolve the path.
+  exists to close. A reader that holds an old tree longer than that
+  must re-resolve the path.
+
+``BUILDS`` counts builds per ``<family>/<kind>`` (``<family>`` for the
+main index), so tests can pin that serving reuses a published tree.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 import tempfile
 import time
+from collections import Counter
+from collections.abc import Callable
 from contextlib import contextmanager
+from pathlib import Path
 
 # how long a force-rebuild trash tree survives before GC may reap it:
 # long enough for any in-flight scan of the old snapshot to finish
 TRASH_GRACE_SEC = 600
+
+# builds per "<family>/<kind>" ("<family>" for the main index)
+BUILDS: Counter[str] = Counter()
+
+
+def index_root() -> str:
+    """The one root every index tree lives under."""
+    return os.environ.get(
+        "SPARK_GRAFT_INDEX_DIR",
+        str(Path(__file__).resolve().parents[2] / "spark-warehouse"),
+    )
+
+
+def artifact_path(family: str, kind: str, version: int, sf_dir: str, source: str) -> str:
+    """``<root>/<family>/<kind>_v<version>/<key>`` (``v<version>`` for
+    the family's main index, ``kind=""``)."""
+    tree = f"{kind}_v{version}" if kind else f"v{version}"
+    return os.path.join(index_root(), family, tree, fingerprint_key(sf_dir, source))
+
+
+def persist(
+    family: str,
+    kind: str,
+    version: int,
+    sf_dir: str,
+    source: str,
+    *,
+    marker: str,
+    meta: dict,
+    write: Callable[[str], dict | None],
+    current: Callable[[str], bool] | None = None,
+    force: bool = False,
+) -> str:
+    """Build the tree ``artifact_path(...)`` once and return its path.
+
+    Returns early when ``marker`` is present and ``current(path)``
+    holds, unless ``force``. Otherwise stages the tree, runs
+    ``write(staging)``, writes ``{"version": version, **meta}`` plus
+    any fields ``write`` returns as the marker, publishes atomically
+    (``force`` renames the live tree aside first), prunes superseded
+    keys and counts the build in ``BUILDS``."""
+    path = artifact_path(family, kind, version, sf_dir, source)
+    if (
+        not force
+        and os.path.isfile(os.path.join(path, marker))
+        and (current is None or current(path))
+    ):
+        return path
+    BUILDS[f"{family}/{kind}" if kind else family] += 1
+    with staging_tree(path) as staging:
+        extra = write(staging)
+        with open(os.path.join(staging, marker), "w") as f:
+            json.dump({"version": version, **meta, **(extra or {})}, f)
+        publish_staging(staging, path, marker=marker, force=force)
+    prune_stale_keys(path, sf_dir)
+    return path
 
 
 def fingerprint_key(sf_dir: str, source_file: str) -> str:

@@ -27,18 +27,12 @@ import json
 import os
 import shutil
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
-from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    fingerprint_key,
-    prune_stale_keys,
-    publish_staging,
-    staging_tree,
-)
+from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path, persist
 from game_data_etl_pipeline_spark.registry import register
 
 
@@ -1656,17 +1650,6 @@ def op_corpus_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
 # distinct benchmark (b_id, g) rescreen side) + meta.json marker.
 BLOOM_INDEX_VERSION = 1
 
-# test hook: serving twice in one process must hit the persisted
-# artifact, never rebuild (the ann/lex build-count discipline)
-_BLOOM_BUILD_COUNT = 0
-
-
-def _bloom_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR_BLOOM",
-        str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "bloom_index"),
-    )
-
 
 def check_bloom_meta(path: str) -> None:
     """Serving-time geometry handshake: a persisted filter PROBED at a
@@ -1734,13 +1717,13 @@ def words_bitmatch_audit(
     return bitmatch_audit(words_a, words_b, ["widx"], "bits", out)
 
 
-def bloom_index_dir(sf_dir: str) -> str:
-    """Artifact dir for one fixture's benchmark filter: keyed by the
-    documents file's (size, mtime_ns) fingerprint — a regenerated
-    corpus mints a fresh filter and GC prunes the stale key (the
-    shared artifacts.py discipline)."""
-    key = fingerprint_key(sf_dir, "documents.parquet")
-    return os.path.join(_bloom_root(), f"v{BLOOM_INDEX_VERSION}", key)
+def bloom_index_dir(sf_dir: str, kind: str = "") -> str:
+    """Artifact dir for one fixture's benchmark filter (``kind=""``) or
+    one of its upsert/registry trees: keyed by the documents file's
+    (size, mtime_ns) fingerprint — a regenerated corpus mints a fresh
+    filter and GC prunes the stale key (the shared artifacts.py
+    discipline)."""
+    return artifact_path("bloom_index", kind, BLOOM_INDEX_VERSION, sf_dir, "documents.parquet")
 
 
 def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
@@ -1753,20 +1736,17 @@ def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
     again by any screen that serves from this tree. Staged build +
     atomic rename + superseded-key GC — the artifacts.py lifecycle
     shared with the ANN and lexical indexes."""
-    global _BLOOM_BUILD_COUNT
     final = bloom_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")) and _geometry_current(final):
-        return final
-    _BLOOM_BUILD_COUNT += 1
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_bench = F.pmod(F.col("doc_id"), F.lit(3)) == 0
-    pairs = (
-        _shingles(docs.filter(is_bench))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint()  # one bench shingle pass feeds pairs + words
-    )
-    with staging_tree(final) as staging:
+
+    def write(staging: str) -> dict:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        is_bench = F.pmod(F.col("doc_id"), F.lit(3)) == 0
+        pairs = (
+            _shingles(docs.filter(is_bench))
+            .select(F.col("doc_id").alias("b_id"), "g")
+            .distinct()
+            .localCheckpoint()  # one bench shingle pass feeds pairs + words
+        )
         pairs.coalesce(4).write.mode("overwrite").parquet(
             os.path.join(staging, "pairs")
         )
@@ -1778,18 +1758,15 @@ def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
         words.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staging, "words")
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": BLOOM_INDEX_VERSION,
-                    "bits": BLOOM_BITS,
-                    "seeds": list(BLOOM_SEEDS),
-                    "fill_ratio": fill,
-                },
-                f,
-            )
-        publish_staging(staging, final, marker="meta.json")
-    prune_stale_keys(final, sf_dir)
+        return {"fill_ratio": fill}
+
+    persist(
+        "bloom_index", "", BLOOM_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="meta.json",
+        meta={"bits": BLOOM_BITS, "seeds": list(BLOOM_SEEDS)},
+        write=write,
+        current=_geometry_current,
+    )
     # post-publish invariant: if the stale tree could not be displaced
     # (_geometry_current swallows non-ENOENT OSErrors too) the publish
     # rename fails and its race fallback would accept the STALE tree's
@@ -1802,6 +1779,7 @@ def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_corpus_decontaminate_bloom_served",
     tags=("llm", "dedup", "curation", "scale", "index"),
+    prepare=(build_bloom_index,),
     # the exact screen's ledger VERBATIM plus the pruning audit — the
     # served path must reproduce the offline screen value for value
     oracle=decontam_ledger_oracle("bloom_pruned"),
@@ -1868,6 +1846,7 @@ def op_corpus_decontaminate_bloom_served(spark: SparkSession, sf_dir: str) -> Da
 @register(
     "op_bloom_saturation_audit",
     tags=("llm", "dedup", "curation", "index"),
+    prepare=(build_bloom_index,),
     # the bench-side distinct-shingle count is SQL-replayable; the
     # bitmap's popcount is not (xxhash64 geometry), so the fill checks
     # ride as in-query audit booleans the driver hash-pins to TRUE
@@ -1948,43 +1927,36 @@ def ensure_bloom_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     atomic publish + superseded-key GC — the shared artifacts.py
     lifecycle — and the saturation guard runs on the MERGED filter
     (an upsert is exactly when a filter outgrows its geometry)."""
-    final = os.path.join(
-        _bloom_root(),
-        f"upsert_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if os.path.isfile(os.path.join(final, "upsert_done.json")) and _geometry_current(
-        final
-    ):
-        return final
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_pairs = (
-        _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 0))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint()
-    )
-    delta_pairs = (
-        _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 3))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint()
-    )
-    # degenerate-slice guard: an empty base or delta slice would make
-    # every merge referee pass VACUOUSLY (merged == base == rebuilt) —
-    # the silent-degeneration mode the streaming ops' residue assert
-    # exists to catch (round-11 review finding)
-    for slice_name, frame in (
-        ("base (doc_id % 6 == 0)", base_pairs),
-        ("delta (doc_id % 6 == 3)", delta_pairs),
-    ):
-        if not frame.head(1):
-            raise ValueError(
-                f"ensure_bloom_upsert_tree: degenerate fixture — the "
-                f"{slice_name} benchmark slice holds no shingles, so the "
-                f"upsert referees would pass without merging anything"
-            )
-    with staging_tree(final) as staging:
+    final = bloom_index_dir(sf_dir, "upsert")
+
+    def write(staging: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        base_pairs = (
+            _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 0))
+            .select(F.col("doc_id").alias("b_id"), "g")
+            .distinct()
+            .localCheckpoint()
+        )
+        delta_pairs = (
+            _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 3))
+            .select(F.col("doc_id").alias("b_id"), "g")
+            .distinct()
+            .localCheckpoint()
+        )
+        # degenerate-slice guard: an empty base or delta slice would make
+        # every merge referee pass VACUOUSLY (merged == base == rebuilt) —
+        # the silent-degeneration mode the streaming ops' residue assert
+        # exists to catch (round-11 review finding)
+        for slice_name, frame in (
+            ("base (doc_id % 6 == 0)", base_pairs),
+            ("delta (doc_id % 6 == 3)", delta_pairs),
+        ):
+            if not frame.head(1):
+                raise ValueError(
+                    f"ensure_bloom_upsert_tree: degenerate fixture — the "
+                    f"{slice_name} benchmark slice holds no shingles, so the "
+                    f"upsert referees would pass without merging anything"
+                )
         bloom_words(base_pairs.select("g").distinct()).coalesce(1).write.parquet(
             os.path.join(staging, "base_words")
         )
@@ -2003,19 +1975,19 @@ def ensure_bloom_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
         base_pairs.unionByName(delta_pairs).coalesce(4).write.parquet(
             os.path.join(staging, "pairs")
         )
-        with open(os.path.join(staging, "upsert_done.json"), "w") as f:
-            json.dump(
-                {
-                    "version": BLOOM_INDEX_VERSION,
-                    "bits": BLOOM_BITS,
-                    "seeds": list(BLOOM_SEEDS),
-                    "base_slice": "doc_id % 6 == 0",
-                    "delta_slice": "doc_id % 6 == 3",
-                },
-                f,
-            )
-        publish_staging(staging, final, marker="upsert_done.json")
-    prune_stale_keys(final, sf_dir)
+
+    persist(
+        "bloom_index", "upsert", BLOOM_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="upsert_done.json",
+        meta={
+            "bits": BLOOM_BITS,
+            "seeds": list(BLOOM_SEEDS),
+            "base_slice": "doc_id % 6 == 0",
+            "delta_slice": "doc_id % 6 == 3",
+        },
+        write=write,
+        current=_geometry_current,
+    )
     check_bloom_meta(final)  # same post-publish invariant as the build
     return final
 
@@ -2023,6 +1995,7 @@ def ensure_bloom_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_index_upsert",
     tags=("llm", "dedup", "curation", "index"),
+    prepare=(build_bloom_index, ensure_bloom_upsert_tree),
     # the exact screen's ledger VERBATIM (screening from the upserted
     # filter changes where the filter came from, not one ledger value)
     # plus the three audit literals
@@ -2152,13 +2125,9 @@ def ensure_bloom_registry(
     tests/test_llmdata.py digests a family's artifacts between two
     registrations to pin it. Saturation guards the union at every
     registration (the geometry must hold the SUM of the families)."""
-    final = os.path.join(
-        _bloom_root(),
-        f"registry_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
     for fam, residue in families:
-        _register_bloom_family(spark, sf_dir, final, fam, residue)
+        _register_bloom_family(spark, sf_dir, "registry", fam, residue)
+    final = bloom_index_dir(sf_dir, "registry")
     check_bloom_meta(final)  # the shared post-publish geometry invariant
     return final
 
@@ -2188,21 +2157,22 @@ def _family_pairs(
 def _register_bloom_family(
     spark: SparkSession,
     sf_dir: str,
-    final: str,
+    kind: str,
     fam: str,
     residue: int,
     mod: int = 6,
 ) -> None:
-    """One registry registration (see ensure_bloom_registry): no-op if
-    ``fam`` is already in the published marker at the current
-    geometry AND the recorded slice predicate matches the requested
-    one; a predicate mismatch (the snapshot definition changed under
+    """One registration into the registry tree ``kind`` (see
+    ensure_bloom_registry): no-op if ``fam`` is already in the
+    published marker at the current geometry AND the recorded slice
+    predicate matches the requested one; a predicate mismatch (the snapshot definition changed under
     the cache — the round-12 advice's stale-artifact class) delegates
     to the refresh path, which rebuilds THIS family and re-folds the
     union, mirroring the ``_geometry_current`` displace-and-rebuild
     discipline instead of surfacing later as a confusing
     union_equals_full failure. Otherwise stage copy-forward + new
     family + union fold + atomic republish."""
+    final = bloom_index_dir(sf_dir, kind)
     marker_path = os.path.join(final, "registry_done.json")
     registered: dict[str, str] = {}
     if os.path.isfile(marker_path) and _geometry_current(final):
@@ -2211,10 +2181,11 @@ def _register_bloom_family(
         if fam in registered:
             if registered[fam] == f"doc_id % {mod} == {residue}":
                 return
-            refresh_bloom_family(spark, sf_dir, final, fam, residue, mod=mod)
+            refresh_bloom_family(spark, sf_dir, kind, fam, residue, mod=mod)
             return
-    pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
-    with staging_tree(final) as staging:
+
+    def write(staging: str) -> None:
+        pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
         if registered:
             # copy every already-registered family forward byte-for-byte
             shutil.copytree(
@@ -2251,20 +2222,18 @@ def _register_bloom_family(
         union = union.localCheckpoint()
         assert_bloom_fill(union, what=f"bloom_registry[{final}]/{fam}")
         union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-        with open(os.path.join(staging, "registry_done.json"), "w") as f:
-            json.dump(
-                {
-                    "version": BLOOM_INDEX_VERSION,
-                    "bits": BLOOM_BITS,
-                    "seeds": list(BLOOM_SEEDS),
-                    "families": {**registered, fam: f"doc_id % {mod} == {residue}"},
-                },
-                f,
-            )
-        publish_staging(
-            staging, final, marker="registry_done.json", force=bool(registered)
-        )
-    prune_stale_keys(final, sf_dir)
+
+    persist(
+        "bloom_index", kind, BLOOM_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="registry_done.json",
+        meta={
+            "bits": BLOOM_BITS,
+            "seeds": list(BLOOM_SEEDS),
+            "families": {**registered, fam: f"doc_id % {mod} == {residue}"},
+        },
+        write=write,
+        force=True,
+    )
 
 
 def _registry_screen_frames(
@@ -2347,6 +2316,7 @@ def _registry_screen_frames(
 @register(
     "op_bloom_registry_screen",
     tags=("llm", "dedup", "curation", "index"),
+    prepare=(build_bloom_index, ensure_bloom_registry),
     # the exact screen's ledger ATTRIBUTED per benchmark family: the
     # %6 residues partition the %3==0 benchmark, so DuckDB replays the
     # per-family hit counts exactly; the three referees ride as TRUE
@@ -2422,7 +2392,7 @@ def op_bloom_registry_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def refresh_bloom_family(
     spark: SparkSession,
     sf_dir: str,
-    final: str,
+    kind: str,
     fam: str,
     residue: int,
     mod: int = 6,
@@ -2439,6 +2409,7 @@ def refresh_bloom_family(
     changed the filter. Every other family's artifacts are copied
     forward byte-for-byte (the registration discipline); staged +
     atomically republished."""
+    final = bloom_index_dir(sf_dir, kind)
     # geometry handshake FIRST (the registration path's discipline):
     # refreshing a stale-geometry tree would bit_or old-geometry family
     # words with a new-geometry rebuild into one incoherent union
@@ -2452,8 +2423,9 @@ def refresh_bloom_family(
     target_pred = f"doc_id % {mod} == {residue}"
     if registered.get(fam) == target_pred:
         return  # already at this snapshot
-    pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
-    with staging_tree(final) as staging:
+
+    def write(staging: str) -> None:
+        pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
         shutil.copytree(
             os.path.join(final, "families"), os.path.join(staging, "families")
         )
@@ -2495,10 +2467,14 @@ def refresh_bloom_family(
         )
         assert_bloom_fill(union, what=f"bloom_registry_refresh[{final}]/{fam}")
         union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-        with open(os.path.join(staging, "registry_done.json"), "w") as f:
-            json.dump({**meta, "families": {**registered, fam: target_pred}}, f)
-        publish_staging(staging, final, marker="registry_done.json", force=True)
-    prune_stale_keys(final, sf_dir)
+
+    persist(
+        "bloom_index", kind, BLOOM_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="registry_done.json",
+        meta={**meta, "families": {**registered, fam: target_pred}},
+        write=write,
+        force=True,
+    )
 
 
 def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -2510,11 +2486,7 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
     same family content as ensure_bloom_registry, reached through a
     refresh instead of a registration, plus the preserved pre-refresh
     union for the did-work referee."""
-    final = os.path.join(
-        _bloom_root(),
-        f"refresh_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
+    final = bloom_index_dir(sf_dir, "refresh")
     import time as _time
 
     def _assert_refresh_did_work() -> None:
@@ -2558,9 +2530,9 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
                 os.utime(trash, None)
             except OSError:
                 pass  # a concurrent builder already displaced it
-    _register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
-    _register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
-    refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
+    _register_bloom_family(spark, sf_dir, "refresh", "suite_a", 0, mod=6)
+    _register_bloom_family(spark, sf_dir, "refresh", "suite_b", 3, mod=12)
+    refresh_bloom_family(spark, sf_dir, "refresh", "suite_b", 3, mod=6)
     check_bloom_meta(final)
     _assert_refresh_did_work()
     return final
@@ -2569,6 +2541,7 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_registry_refresh",
     tags=("llm", "dedup", "curation", "index"),
+    prepare=(build_bloom_index, ensure_bloom_refresh_demo),
     # the end state is content-identical to the registry screen's
     # (suite_a = %6==0, suite_b = %6==3), so the per-family ledger
     # oracle is the same; the refresh-specific referees ride as TRUE
@@ -2641,7 +2614,7 @@ def op_bloom_registry_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def retire_bloom_family(
-    spark: SparkSession, sf_dir: str, final: str, fam: str
+    spark: SparkSession, sf_dir: str, kind: str, fam: str
 ) -> None:
     """RETIRE one family from a published registry — the lifecycle
     half register (add) and refresh (revise) cannot express (round-12
@@ -2657,6 +2630,7 @@ def retire_bloom_family(
     forward byte-for-byte; staged + atomically republished, so a
     crash mid-retire leaves the old registry serving. Idempotent: a
     family absent from the marker is already retired."""
+    final = bloom_index_dir(sf_dir, kind)
     check_bloom_meta(final)
     marker_path = os.path.join(final, "registry_done.json")
     with open(marker_path) as f:
@@ -2671,7 +2645,8 @@ def retire_bloom_family(
             f"EMPTY registry — a screen probing an all-zero union flags "
             f"nothing and looks healthy; drop the registry tree instead"
         )
-    with staging_tree(final) as staging:
+
+    def write(staging: str) -> None:
         shutil.copytree(
             os.path.join(final, "families"), os.path.join(staging, "families")
         )
@@ -2704,16 +2679,14 @@ def retire_bloom_family(
         )
         assert_bloom_fill(union, what=f"bloom_registry_retire[{final}]/{fam}")
         union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-        with open(os.path.join(staging, "registry_done.json"), "w") as f:
-            json.dump(
-                {
-                    **meta,
-                    "families": {o: registered[o] for o in survivors},
-                },
-                f,
-            )
-        publish_staging(staging, final, marker="registry_done.json", force=True)
-    prune_stale_keys(final, sf_dir)
+
+    persist(
+        "bloom_index", kind, BLOOM_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="registry_done.json",
+        meta={**meta, "families": {o: registered[o] for o in survivors}},
+        write=write,
+        force=True,
+    )
 
 
 def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -2723,11 +2696,7 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
     registry), then suite_b is RETIRED. End state: a one-family
     registry whose union is suite_a's filter alone, plus the
     preserved pre-retire union for the shrunk-filter referee."""
-    final = os.path.join(
-        _bloom_root(),
-        f"retire_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
+    final = bloom_index_dir(sf_dir, "retire")
     import time as _time
 
     def _assert_retire_did_work() -> None:
@@ -2770,8 +2739,8 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
             except OSError:
                 pass  # a concurrent builder already displaced it
     for fam, residue in BLOOM_FAMILIES:
-        _register_bloom_family(spark, sf_dir, final, fam, residue)
-    retire_bloom_family(spark, sf_dir, final, "suite_b")
+        _register_bloom_family(spark, sf_dir, "retire", fam, residue)
+    retire_bloom_family(spark, sf_dir, "retire", "suite_b")
     check_bloom_meta(final)
     _assert_retire_did_work()
     return final
@@ -2780,6 +2749,7 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_registry_retire",
     tags=("llm", "dedup", "curation", "index"),
+    prepare=(ensure_bloom_retire_demo,),
     # the post-retire ledger holds ONLY the surviving family's
     # attributions — DuckDB replays the screen against suite_a alone,
     # so any lingering suite_b attribution (or a hit admitted only by
@@ -2887,11 +2857,7 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
     nor a safe prefix is displaced through the trash-grace window
     and the lineage rebuilds from scratch (the refresh demo's
     deadend discipline, scoped to exactly the unresumable states)."""
-    final = os.path.join(
-        _bloom_root(),
-        f"lifecycle_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
+    final = bloom_index_dir(sf_dir, "lifecycle")
     end = {"suite_a": "doc_id % 6 == 0", "suite_b": "doc_id % 6 == 3"}
 
     def _retire_did_work() -> bool:
@@ -2927,11 +2893,11 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
                 os.utime(trash, None)  # grace clock starts at displacement
             except OSError:
                 pass  # a concurrent builder already displaced it
-    _register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
-    _register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
-    refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
-    _register_bloom_family(spark, sf_dir, final, "suite_c", 1, mod=12)
-    retire_bloom_family(spark, sf_dir, final, "suite_c")
+    _register_bloom_family(spark, sf_dir, "lifecycle", "suite_a", 0, mod=6)
+    _register_bloom_family(spark, sf_dir, "lifecycle", "suite_b", 3, mod=12)
+    refresh_bloom_family(spark, sf_dir, "lifecycle", "suite_b", 3, mod=6)
+    _register_bloom_family(spark, sf_dir, "lifecycle", "suite_c", 1, mod=12)
+    retire_bloom_family(spark, sf_dir, "lifecycle", "suite_c")
     check_bloom_meta(final)
     if not _retire_did_work():
         raise ValueError(
@@ -2945,6 +2911,7 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_registry_lifecycle_e2e",
     tags=("llm", "dedup", "curation", "index"),
+    prepare=(build_bloom_index, ensure_bloom_lifecycle_demo),
     # the end state is content-identical to the standard two-family
     # registry (the lineage's detours — suite_b's stale half snapshot,
     # suite_c's registration — are all superseded or retired), so the

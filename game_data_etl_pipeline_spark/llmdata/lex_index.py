@@ -32,20 +32,13 @@ share the original DuckDB oracle verbatim.
 
 from __future__ import annotations
 
-import json
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
-from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    fingerprint_key,
-    prune_stale_keys,
-    publish_staging,
-    staging_tree,
-)
+from game_data_etl_pipeline_spark.llmdata.artifacts import persist
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, _terms
 from game_data_etl_pipeline_spark.registry import register
 
@@ -55,9 +48,6 @@ from game_data_etl_pipeline_spark.registry import register
 # bucket, so the format version bumps and v1 artifacts are never mixed.
 LEX_INDEX_VERSION = 2
 LEX_BUCKETS = 16
-
-# test hook: serving twice in one process must not rebuild
-_LEX_BUILD_COUNT = 0
 
 # term-tuple -> bucket list, memoized per process: xxhash64 lives
 # JVM-side, so resolving a query's buckets costs one bounded 3-row
@@ -69,18 +59,6 @@ def _bucket(term_col):
     return F.pmod(F.xxhash64(term_col), F.lit(LEX_BUCKETS)).cast("int")
 
 
-def _lex_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_LEX_INDEX_DIR",
-        str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "lex_index"),
-    )
-
-
-def lex_index_dir(sf_dir: str) -> str:
-    key = fingerprint_key(sf_dir, "documents.parquet")
-    return os.path.join(_lex_root(), f"v{LEX_INDEX_VERSION}", key)
-
-
 def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
     """Tokenize the corpus ONCE and persist the inverted index
     (idempotent per corpus fingerprint; staged + atomically renamed
@@ -89,32 +67,28 @@ def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
     tiny stats aggregate, and a shuffle on term_bucket to lay the
     postings out as the term-sharded inverted file — all paid once
     per corpus snapshot."""
-    global _LEX_BUILD_COUNT
-    final = lex_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")):
-        return final
-    _LEX_BUILD_COUNT += 1
-    docs = load_table(spark, sf_dir, "documents")
-    # split projected once below the Generate: size(split)+explode(split)
-    # in one select re-splits the text per exploded row (guide §2.3)
-    t = docs.withColumn("terms", _terms()).select(
-        "doc_id", F.size("terms").alias("dl"), F.explode("terms").alias("term")
-    )
-    postings = (
-        t.groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("term_bucket", _bucket(F.col("term")))
-    )
-    dfq = (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("term_bucket", _bucket(F.col("term")))
-    )
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(_terms())).alias("tot_dl"),
-    )
-    with staging_tree(final) as staging:
+
+    def write(staging: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        # split projected once below the Generate: size(split)+explode(split)
+        # in one select re-splits the text per exploded row (guide §2.3)
+        t = docs.withColumn("terms", _terms()).select(
+            "doc_id", F.size("terms").alias("dl"), F.explode("terms").alias("term")
+        )
+        postings = (
+            t.groupBy("term", "doc_id", "dl")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn("term_bucket", _bucket(F.col("term")))
+        )
+        dfq = (
+            postings.groupBy("term")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .withColumn("term_bucket", _bucket(F.col("term")))
+        )
+        stats = docs.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.size(_terms())).alias("tot_dl"),
+        )
         (
             postings.repartition("term_bucket")
             .write.mode("overwrite")
@@ -130,16 +104,17 @@ def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
         stats.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staging, "stats")
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump({"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}, f)
-        publish_staging(staging, final, marker="meta.json")
-    prune_stale_keys(final, sf_dir)
-    return final
+
+    return persist(
+        "lex_index", "", LEX_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="meta.json", meta={"buckets": LEX_BUCKETS}, write=write,
+    )
 
 
 @register(
     "op_text_bm25_serve",
     tags=("llm", "text", "index"),
+    prepare=(build_lex_index,),
     # the EXACT oracle op_text_bm25 uses: the persisted-index path must
     # reproduce the corpus-scan path value for value
     oracle=BM25_CTES
@@ -243,14 +218,8 @@ def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     whole tree stages + atomically renames (the ann upsert
     discipline); df_base/stats_base stay in the tree as provenance
     that the merge read persisted artifacts, not in-memory frames."""
-    demo = os.path.join(
-        _lex_root(),
-        f"upsert_v{LEX_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if os.path.isfile(os.path.join(demo, "upsert_done.json")):
-        return demo
-    with staging_tree(demo) as staging:
+
+    def write(staging: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         split = docs.agg(
             F.expr("max(doc_id) * 4 div 5").cast("long").alias("split")
@@ -313,16 +282,17 @@ def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             .agg(F.sum("n_docs").alias("n_docs"), F.sum("tot_dl").alias("tot_dl"))
         )
         merged_st.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "stats"))
-        with open(os.path.join(staging, "upsert_done.json"), "w") as f:
-            json.dump({"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}, f)
-        publish_staging(staging, demo, marker="upsert_done.json")
-    prune_stale_keys(demo, sf_dir)
-    return demo
+
+    return persist(
+        "lex_index", "upsert", LEX_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="upsert_done.json", meta={"buckets": LEX_BUCKETS}, write=write,
+    )
 
 
 @register(
     "op_lex_index_upsert",
     tags=("llm", "text", "index"),
+    prepare=(ensure_lex_upsert_tree,),
     # op_text_bm25's verbatim oracle, same as op_text_bm25_serve: the
     # POST-UPSERT index must reproduce the full-corpus scorer
     # bit-for-bit — incremental maintenance held to exact equality
@@ -359,9 +329,31 @@ def op_lex_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_from_index(spark, demo)
 
 
+def ensure_lex_compact_tree(spark: SparkSession, sf_dir: str) -> str:
+    """Build (idempotently) op_lex_index_delete_compact's compacted
+    tree: the upsert tree's postings minus the residue tombstones,
+    compacted through ``compact_lex_postings``."""
+    from game_data_etl_pipeline_spark.llmdata.ann_index import (
+        TOMB_MOD,
+        purge_ledger_current,
+    )
+
+    demo = ensure_lex_upsert_tree(spark, sf_dir)
+    return persist(
+        "lex_index", "compact", LEX_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="compact_done.json",
+        meta={"tomb_mod": TOMB_MOD},
+        write=lambda staging: compact_lex_postings(
+            spark, os.path.join(demo, "postings"), staging
+        ),
+        current=lambda p: purge_ledger_current(p, p),
+    )
+
+
 @register(
     "op_lex_index_delete_compact",
     tags=("llm", "text", "index"),
+    prepare=(ensure_lex_compact_tree,),
     # op_text_bm25's oracle RECOMPUTED over the surviving corpus: after
     # deletes, df / n_docs / tot_dl all shift, so every surviving score
     # changes — and the compacted index must reproduce the re-derived
@@ -396,30 +388,7 @@ def op_lex_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (partition pruning scopes per-bucket schedules), and the df
     recompute is the same pass — no extra corpus touch, document text
     never read."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        TOMB_MOD,
-        purge_ledger_current,
-    )
-
-    demo = ensure_lex_upsert_tree(spark, sf_dir)
-    comp = os.path.join(
-        _lex_root(),
-        f"compact_v{LEX_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if not (
-        os.path.isfile(os.path.join(comp, "compact_done.json"))
-        and purge_ledger_current(comp, comp)
-    ):
-        with staging_tree(comp) as staging:
-            compact_lex_postings(spark, os.path.join(demo, "postings"), staging)
-            with open(os.path.join(staging, "compact_done.json"), "w") as f:
-                json.dump(
-                    {"version": LEX_INDEX_VERSION, "tomb_mod": TOMB_MOD}, f
-                )
-            publish_staging(staging, comp, marker="compact_done.json")
-        prune_stale_keys(comp, sf_dir)
-    return bm25_from_index(spark, comp)
+    return bm25_from_index(spark, ensure_lex_compact_tree(spark, sf_dir))
 
 
 def compact_lex_postings(
@@ -532,35 +501,19 @@ def ensure_lex_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     )
 
     demo = ensure_lex_upsert_tree(spark, sf_dir)
-    e2e = os.path.join(
-        _lex_root(),
-        f"e2e_v{LEX_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if (
-        os.path.isfile(os.path.join(e2e, "e2e_done.json"))
-        and tomb_ids_current(e2e, "e2e_done.json")
-        and purge_ledger_current(e2e, e2e)
-    ):
-        return e2e
-    with staging_tree(e2e) as staging:
-        compact_lex_postings(
+    e2e = persist(
+        "lex_index", "e2e", LEX_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="e2e_done.json",
+        meta={"buckets": LEX_BUCKETS, "tomb_ids": list(TOMB_IDS)},
+        write=lambda staging: compact_lex_postings(
             spark,
             os.path.join(demo, "postings"),
             staging,
             tombstones=tombstone_ids_df(spark, "doc_id"),
-        )
-        with open(os.path.join(staging, "e2e_done.json"), "w") as f:
-            json.dump(
-                {
-                    "version": LEX_INDEX_VERSION,
-                    "buckets": LEX_BUCKETS,
-                    "tomb_ids": list(TOMB_IDS),
-                },
-                f,
-            )
-        publish_staging(staging, e2e, marker="e2e_done.json")
-    prune_stale_keys(e2e, sf_dir)
+        ),
+        current=lambda p: tomb_ids_current(p, "e2e_done.json")
+        and purge_ledger_current(p, p),
+    )
     check_tomb_meta(e2e, "e2e_done.json")  # post-publish invariant
     return e2e
 
@@ -586,6 +539,7 @@ def _e2e_survivor_oracle() -> str:
 @register(
     "op_lex_lifecycle_e2e",
     tags=("llm", "text", "index"),
+    prepare=(ensure_lex_e2e_tree,),
     oracle=_e2e_survivor_oracle(),
 )
 def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:

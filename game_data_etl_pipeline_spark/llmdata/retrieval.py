@@ -58,7 +58,8 @@ from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table, widen_narrow_scan
 from game_data_etl_pipeline_spark.llmdata import text as _text
-from game_data_etl_pipeline_spark.llmdata.ann_index import read_ann_index
+from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index, read_ann_index
+from game_data_etl_pipeline_spark.llmdata.lex_index import build_lex_index
 from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_PROBES,
     IVFPQ_SHORTLIST,
@@ -335,6 +336,7 @@ def ann_sem_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_retrieval_pipeline_ann",
     tags=("llm", "retrieval", "pipeline", "index"),
+    prepare=(build_ann_index,),
     oracle=_text.BM25_CTES
     + """,
         lex AS (
@@ -663,6 +665,7 @@ FILTERED_PROBES = 4  # selective predicates thin each cell's survivors:
 @register(
     "op_sim_filtered_ann_serve",
     tags=("llm", "retrieval", "similarity", "index"),
+    prepare=(build_ann_index,),
     oracle="""
         WITH allowed AS (
             SELECT doc_id FROM documents WHERE lang = 'de'
@@ -907,6 +910,7 @@ def op_retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_retrieval_pipeline_served",
     tags=("llm", "retrieval", "pipeline", "index"),
+    prepare=(build_lex_index, build_ann_index),
     oracle=_text.BM25_CTES
     + """,
         lex AS (
@@ -1155,10 +1159,7 @@ def lex_ranked_batch_served(
     the equivalence is structural, not approximate — which is what
     lets q_retrieval_pipeline_batch_served keep the machine-generated
     batch oracle VERBATIM."""
-    from game_data_etl_pipeline_spark.llmdata.lex_index import (
-        build_lex_index,
-        resolve_term_buckets,
-    )
+    from game_data_etl_pipeline_spark.llmdata.lex_index import resolve_term_buckets
 
     path = build_lex_index(spark, sf_dir)
     all_terms = tuple(sorted({t for ts in query_terms.values() for t in ts}))
@@ -1517,6 +1518,7 @@ def q_retrieval_pipeline_batch8(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_retrieval_pipeline_batch_served",
     tags=("llm", "retrieval", "pipeline", "index"),
+    prepare=(build_lex_index,),
     # the 3-query batch oracle VERBATIM: serving the lexical side from
     # the persisted index is bit-equal to the corpus-scan side (same
     # integers, same IEEE expression), so the whole batch output —
@@ -1553,6 +1555,7 @@ def q_retrieval_pipeline_batch_served(spark: SparkSession, sf_dir: str) -> DataF
 @register(
     "q_retrieval_pipeline_batch_served8",
     tags=("llm", "retrieval", "pipeline", "index"),
+    prepare=(build_lex_index,),
     # the 8-query batch oracle VERBATIM (machine-generated from the
     # same dict as q_retrieval_pipeline_batch8): the index-served
     # lexical side is bit-equal to the scan side at any N
@@ -1638,6 +1641,7 @@ def _batch_ann_oracle_sql(query_terms: dict[int, tuple[str, ...]]) -> str:
 @register(
     "q_retrieval_pipeline_batch_ann",
     tags=("llm", "retrieval", "pipeline", "index"),
+    prepare=(build_lex_index, build_ann_index),
     oracle=_batch_ann_oracle_sql(BATCH_QUERY_TERMS),
 )
 def q_retrieval_pipeline_batch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,6 +1653,7 @@ def q_retrieval_pipeline_batch_ann(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "q_retrieval_pipeline_batch_ann8",
     tags=("llm", "retrieval", "pipeline", "index"),
+    prepare=(build_lex_index, build_ann_index),
     # the batch-ANN oracle machine-generated from the 8-query dict:
     # per-query lexical spines value-hashed, approximate side held by
     # the per-query in-query audits
@@ -1782,34 +1787,10 @@ LATE_INDEX_VERSION = 1
 # prunes to n_query_term_buckets/LATE_BUCKETS of the posting files
 LATE_BUCKETS = 32
 
-# test hook: a second serve in one process must reuse the persisted
-# artifact, never rebuild (the lex_index._LEX_BUILD_COUNT discipline)
-_LATE_BUILD_COUNT = 0
-
 # query-term -> bucket ids, memoized per process (the lex_index
 # _BUCKET_CACHE discipline: xxhash64 lives JVM-side, so resolving the
 # registered query set's buckets costs one bounded 9-row job, once)
 _LATE_BUCKET_CACHE: dict[tuple[str, ...], list[int]] = {}
-
-
-def _late_root() -> str:
-    import pathlib
-
-    return os.environ.get(
-        "SPARK_GRAFT_LATE_INDEX_DIR",
-        str(
-            pathlib.Path(__file__).resolve().parents[2]
-            / "spark-warehouse"
-            / "late_index"
-        ),
-    )
-
-
-def late_index_dir(sf_dir: str) -> str:
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
-
-    key = fingerprint_key(sf_dir, "documents.parquet")
-    return os.path.join(_late_root(), f"v{LATE_INDEX_VERSION}", key)
 
 
 def _late_bucket(term_col):
@@ -1835,27 +1816,16 @@ def build_late_index(spark: SparkSession, sf_dir: str) -> str:
     Cost shape: one corpus scan feeds all three writes; everything
     downstream of the scan is (doc_id, token)-narrow — document
     bodies are read once per corpus snapshot and never again."""
-    global _LATE_BUILD_COUNT
     from game_data_etl_pipeline_spark.catalog import load_table as _load
-    from game_data_etl_pipeline_spark.llmdata.artifacts import (
-        prune_stale_keys,
-        publish_staging,
-        staging_tree,
-    )
+    from game_data_etl_pipeline_spark.llmdata.artifacts import persist
     from game_data_etl_pipeline_spark.llmdata.similarity import (
         _ctx_keys_expr,
         norm_expr as _norm,
         token_vec_expr,
     )
 
-    final = late_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")):
-        return final
-    _LATE_BUILD_COUNT += 1
-    import json as _json
-
-    docs = _load(spark, sf_dir, "documents")
-    with staging_tree(final) as staging:
+    def write(staging: str) -> None:
+        docs = _load(spark, sf_dir, "documents")
         du = docs.select(
             "doc_id", F.explode(F.split("text", " ")).alias("dterm")
         ).distinct()
@@ -1879,13 +1849,11 @@ def build_late_index(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(staging, "vocab"))
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            _json.dump(
-                {"version": LATE_INDEX_VERSION, "buckets": LATE_BUCKETS}, f
-            )
-        publish_staging(staging, final, marker="meta.json")
-    prune_stale_keys(final, sf_dir)
-    return final
+
+    return persist(
+        "late_index", "", LATE_INDEX_VERSION, sf_dir, "documents.parquet",
+        marker="meta.json", meta={"buckets": LATE_BUCKETS}, write=write,
+    )
 
 
 def _late_query_buckets(spark: SparkSession) -> list[int]:
@@ -1912,6 +1880,7 @@ def _late_query_buckets(spark: SparkSession) -> list[int]:
 @register(
     "op_sim_late_interaction_served",
     tags=("llm", "similarity", "retrieval", "index"),
+    prepare=(build_late_index,),
     # op_sim_late_interaction's oracle VERBATIM (one shared string):
     # serving from the persisted token index must reproduce the
     # from-scratch values exactly — a stale vocab row, a lost posting,

@@ -24,11 +24,19 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "game_data_etl_pipeline_spark"
 
 
-def _cpus() -> int:
+def cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS`` if set, else all cores.
+    A malformed or below-1 value raises instead of being coerced."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
-    if env:
-        return max(1, int(env))
-    return os.cpu_count() or 4
+    if not env:
+        return os.cpu_count() or 4
+    try:
+        n = int(env)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {env!r}")
+    return n
 
 
 def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = None) -> SparkSession:
@@ -38,10 +46,10 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = Non
     master is taken from the environment (spark-submit), so we only set
     master when none is configured.
     """
-    cpus = _cpus()
+    n_cpus = cpus()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.shuffle.partitions", str(n_cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -55,7 +63,7 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = Non
     )
     active = SparkSession.getActiveSession()
     if active is None and "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{n_cpus}]")
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
-from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_IDS_SQL
+from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_IDS_SQL, build_ann_index
 from game_data_etl_pipeline_spark.llmdata.dedup import decontam_ledger_oracle
+from game_data_etl_pipeline_spark.llmdata.lex_index import build_lex_index
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES
 from game_data_etl_pipeline_spark.registry import register
 from game_data_etl_pipeline_spark.streaming.engine import events_stream, run_to_memory
@@ -1178,7 +1179,6 @@ def stream_ann_store(
     by op_stream_index_ingest (which audits the store) and
     op_stream_ann_serve (which SERVES from it), so the ingest path
     under audit and the ingest path under serve cannot drift."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
     from game_data_etl_pipeline_spark.llmdata.similarity import ivf_assign, pq_encode
 
     main_path = build_ann_index(spark, sf_dir)
@@ -1230,6 +1230,7 @@ def stream_ann_store(
 @register(
     "op_stream_index_ingest",
     tags=("streaming", "similarity", "index"),
+    prepare=(build_ann_index,),
     oracle="""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_indexed,
                CAST(3 AS BIGINT) AS n_batches,
@@ -1262,7 +1263,6 @@ def op_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's (cent_id, codes) bit-identical to the offline build's
     encode of the same vector — the artifact path and the streaming
     path cannot drift), ``cells_bounded`` (0 < cells <= k=8)."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
     from game_data_etl_pipeline_spark.llmdata.cluster import K
 
     main_path = build_ann_index(spark, sf_dir)
@@ -1320,6 +1320,7 @@ def op_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_stream_lex_ingest",
     tags=("streaming", "llm", "text", "index"),
+    prepare=(build_lex_index,),
     oracle="""
         WITH t AS (
             SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
@@ -1357,11 +1358,7 @@ def op_stream_lex_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tf, dl) bit-identical to the OFFLINE build's row — the streaming
     tokenize path and the build path cannot drift), and
     ``buckets_bounded`` (every term_bucket in [0, LEX_BUCKETS))."""
-    from game_data_etl_pipeline_spark.llmdata.lex_index import (
-        LEX_BUCKETS,
-        _bucket,
-        build_lex_index,
-    )
+    from game_data_etl_pipeline_spark.llmdata.lex_index import LEX_BUCKETS, _bucket
     from game_data_etl_pipeline_spark.llmdata.text import _terms
 
     main_path = build_lex_index(spark, sf_dir)
@@ -1719,6 +1716,7 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_stream_ann_serve",
     tags=("streaming", "similarity", "index"),
+    prepare=(build_ann_index,),
     # op_sim_ivfpq_serve's oracle with the streamed-vs-main referee
     # literal: serving from the stream-ingested segments must produce
     # the same per-query survivor neighborhoods as serving the offline
@@ -1801,6 +1799,7 @@ def op_stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_stream_ann_serve_compacted",
     tags=("streaming", "similarity", "index"),
+    prepare=(build_ann_index,),
     # op_sim_ivfpq_serve's oracle re-derived over the id-LIST survivor
     # world (embeddings WHERE vec_id NOT IN TOMB_IDS — interpolated
     # from the same constant the Spark side broadcasts) plus the
@@ -2150,13 +2149,17 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # from the just-persisted segment is one action fewer, skips
         # the checkpoint, and makes the delta provably a function of
         # the durable artifact, the evidence discipline the compactors
-        # use)
+        # use). Overwrite, not errorifexists: foreachBatch is
+        # at-least-once, and a replayed epoch rewrites its own segment
+        # (its appended word delta is harmless — the bit_or fold is
+        # idempotent)
         seg = os.path.join(pair_store, f"seg{epoch_id}")
         (
             _shingles(batch_df.select("doc_id", "text"))
             .select(F.col("doc_id").alias("b_id"), "g")
             .distinct()
-            .write.parquet(seg)
+            .write.mode("overwrite")
+            .parquet(seg)
         )
         bloom_words(
             spark.read.parquet(seg).select("g").distinct()

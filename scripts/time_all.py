@@ -9,6 +9,11 @@ headline one cannot hide. One rep is noisy (±20%) but outliers worth
 fixing are integer multiples, not percentages — re-measure candidates
 median-of-3 before acting. Streaming specs are skipped (they need a
 sink + trigger, covered by pytest).
+
+Like bench.py, every spec's ``prepare`` (the one-time build of the
+persisted trees it serves from) runs before timing; the total build
+time and the number of prepared specs print on their own line, and the
+per-query times are serving only.
 """
 
 from __future__ import annotations
@@ -31,10 +36,17 @@ def main() -> int:
     # warm-up absorbs session/codegen/footer costs; any spec will do
     warm = specs.get("q_revenue_by_region") or next(iter(specs.values()))
     warm.fn(spark, sf_dir).count()
+    specs = {name: spec for name, spec in specs.items() if "streaming" not in spec.tags}
+    prepared = [spec for spec in specs.values() if spec.prepare is not None]
+    t0 = time.perf_counter()
+    for spec in prepared:
+        try:
+            spec.prepare(spark, sf_dir)
+        except Exception as e:  # noqa: BLE001
+            print(f"prepare {spec.name} ERROR {type(e).__name__}: {e}", file=sys.stderr)
+    print(f"build {time.perf_counter() - t0:.1f} s over {len(prepared)} prepared specs\n")
     rows: list[tuple[float, str]] = []
     for name, spec in specs.items():
-        if "streaming" in spec.tags:
-            continue
         try:
             t0 = time.perf_counter()
             spec.fn(spark, sf_dir).count()

@@ -13,6 +13,8 @@ no exact duplicates (500 distinct md5 over 500 docs).
 
 from __future__ import annotations
 
+import pytest
+
 from game_data_etl_pipeline_spark import registry
 
 SPECS = registry.all_specs()
@@ -798,11 +800,10 @@ def test_compact_serve_equality_and_fewer_segments(spark, sf_dir):
         TOMB_MOD,
         TOMB_RESIDUE,
         _count_parquet_files,
-        _index_root,
         ensure_upsert_tree,
-        fingerprint_key,
         read_ann_index,
     )
+    from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path
     from pyspark.sql import functions as F
 
     # run the registered op once: builds both trees, all audits true
@@ -811,11 +812,7 @@ def test_compact_serve_equality_and_fewer_segments(spark, sf_dir):
     assert row.n_after == row.n_before - row.n_tombstoned
 
     demo = ensure_upsert_tree(spark, sf_dir)
-    comp = _os.path.join(
-        _index_root(),
-        f"compact_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
+    comp = artifact_path("ann_index", "compact", INDEX_VERSION, sf_dir, "embeddings.parquet")
     coarse, books, _ = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     tomb = F.pmod(F.col("vec_id"), F.lit(TOMB_MOD)) == TOMB_RESIDUE
@@ -856,7 +853,7 @@ def test_index_fingerprint_staleness(spark, sf_dir, tmp_path, monkeypatch):
     fixture.mkdir()
     _shutil.copy(_os.path.join(sf_dir, "documents.parquet"), fixture / "documents.parquet")
     _shutil.copy(_os.path.join(sf_dir, "embeddings.parquet"), fixture / "embeddings.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_LEX_INDEX_DIR", str(tmp_path / "lexroot"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "lexroot"))
 
     first = lx.build_lex_index(spark, str(fixture))
     assert _os.path.isfile(_os.path.join(first, "meta.json"))
@@ -1081,9 +1078,9 @@ def test_decontaminate_catches_cross_split_near_dups(spark, sf_dir):
 
 def test_cold_start_index_lifecycle(spark, sf_dir, tmp_path, monkeypatch):
     """The WHOLE index lifecycle must work from an EMPTY warehouse in
-    one process — the state a fresh driver machine is in: both roots
-    pointed at empty temp dirs, then build -> serve -> upsert ->
-    compact on both modalities plus the streamed ingest, every op
+    one process — the state a fresh driver machine is in: the index
+    root pointed at an empty temp dir, then build -> serve -> upsert ->
+    compact -> merge on every tree kind plus the streamed ingest, every op
     still matching its DuckDB oracle. Catches any hidden dependency
     on pre-existing artifacts (a serve op that only works because a
     previous round left its tree behind)."""
@@ -1092,9 +1089,7 @@ def test_cold_start_index_lifecycle(spark, sf_dir, tmp_path, monkeypatch):
     from tests.conftest import make_duck
     from tests.oracle import compare
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "ann"))
-    monkeypatch.setenv("SPARK_GRAFT_LEX_INDEX_DIR", str(tmp_path / "lex"))
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index"))
     con = make_duck(sf_dir)
     try:
         for name in (
@@ -1115,12 +1110,35 @@ def test_cold_start_index_lifecycle(spark, sf_dir, tmp_path, monkeypatch):
             "op_bloom_registry_screen",
             "op_bloom_registry_refresh",
             "op_bloom_registry_retire",
+            "op_bloom_registry_lifecycle_e2e",
+            "op_sim_late_interaction_served",
+            "op_sim_index_merge_policy",
+            "op_sim_ivfpq_serve_merged",
         ):
             sdf = SPECS[name].fn(spark, sf_dir)
             problems = compare(sdf, con.execute(SPECS[name].oracle).df(), name)
             assert not problems, (name, problems)
     finally:
         con.close()
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n, spec in SPECS.items() if spec.prepare is not None)
+)
+def test_prepared_spec_publishes_nothing(spark, sf_dir, tmp_path, monkeypatch, name):
+    """The build/serve split: ``prepare`` builds every persisted tree
+    its query reads, so the query run after it only serves — no
+    ``persist`` build moves ``artifacts.BUILDS``. Each spec starts from
+    its own EMPTY index root, so a tree missing from ``prepare`` cannot
+    hide behind one an earlier test left behind."""
+    from game_data_etl_pipeline_spark.llmdata.artifacts import BUILDS
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index"))
+    spec = SPECS[name]
+    spec.prepare(spark, sf_dir)
+    before = dict(BUILDS)
+    spec.fn(spark, sf_dir).count()
+    assert dict(BUILDS) == before, f"{name} built a tree its prepare did not"
 
 
 def test_bloom_registry_attribution_and_isolation(spark, sf_dir, tmp_path, monkeypatch):
@@ -1147,7 +1165,7 @@ def test_bloom_registry_attribution_and_isolation(spark, sf_dir, tmp_path, monke
                     h.update(fn.encode() + f.read())
         return h.hexdigest()
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
     # (a) register suite_a ALONE, snapshot its published bytes, then
     # let suite_b register into the live tree — the between-the-two-
     # registrations baseline the round-12 review demanded
@@ -1191,7 +1209,7 @@ def test_bloom_registry_refresh_semantics(spark, sf_dir, tmp_path, monkeypatch):
 
     from game_data_etl_pipeline_spark.catalog import load_table
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path
 
     def _tree_digest(d):
         h = _hashlib.sha256()
@@ -1201,21 +1219,19 @@ def test_bloom_registry_refresh_semantics(spark, sf_dir, tmp_path, monkeypatch):
                     h.update(fn.encode() + f.read())
         return h.hexdigest()
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
-    final = _os.path.join(
-        dd._bloom_root(),
-        f"refresh_v{dd.BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
+    final = artifact_path(
+        "bloom_index", "refresh", dd.BLOOM_INDEX_VERSION, sf_dir, "documents.parquet"
     )
-    dd._register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
-    dd._register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
+    dd._register_bloom_family(spark, sf_dir, "refresh", "suite_a", 0, mod=6)
+    dd._register_bloom_family(spark, sf_dir, "refresh", "suite_b", 3, mod=12)
     a_dir = _os.path.join(final, "families", "suite_a")
     before = _tree_digest(a_dir)
     stale_union = {
         r.widx: r.bits
         for r in spark.read.parquet(_os.path.join(final, "union_words")).collect()
     }
-    dd.refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
+    dd.refresh_bloom_family(spark, sf_dir, "refresh", "suite_b", 3, mod=6)
     assert _tree_digest(a_dir) == before, "refresh mutated the other family"
     now_union = {
         r.widx: r.bits
@@ -1255,27 +1271,25 @@ def test_register_predicate_mismatch_self_heals(spark, sf_dir, tmp_path, monkeyp
     import os as _os
 
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
-    final = _os.path.join(
-        dd._bloom_root(),
-        f"registry_v{dd.BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
+    final = artifact_path(
+        "bloom_index", "registry", dd.BLOOM_INDEX_VERSION, sf_dir, "documents.parquet"
     )
-    dd._register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
+    dd._register_bloom_family(spark, sf_dir, "registry", "suite_a", 0, mod=6)
     marker = _os.path.join(final, "registry_done.json")
     with open(marker) as f:
         assert _json.load(f)["families"]["suite_a"] == "doc_id % 6 == 0"
 
     # same (fam, predicate): pure cache hit, no republish
     mtime = _os.path.getmtime(marker)
-    dd._register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
+    dd._register_bloom_family(spark, sf_dir, "registry", "suite_a", 0, mod=6)
     assert _os.path.getmtime(marker) == mtime
 
     # same fam, DIFFERENT predicate: cache miss -> refresh rebuilds the
     # family from the new snapshot and re-records the predicate
-    dd._register_bloom_family(spark, sf_dir, final, "suite_a", 3, mod=12)
+    dd._register_bloom_family(spark, sf_dir, "registry", "suite_a", 3, mod=12)
     with open(marker) as f:
         assert _json.load(f)["families"]["suite_a"] == "doc_id % 12 == 3"
     from pyspark.sql import functions as F
@@ -1316,7 +1330,7 @@ def test_bloom_registry_retire_semantics(spark, sf_dir, tmp_path, monkeypatch):
     import pytest
 
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path
 
     def _tree_digest(d):
         h = _hashlib.sha256()
@@ -1326,14 +1340,12 @@ def test_bloom_registry_retire_semantics(spark, sf_dir, tmp_path, monkeypatch):
                     h.update(fn.encode() + f.read())
         return h.hexdigest()
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
-    final = _os.path.join(
-        dd._bloom_root(),
-        f"retire_v{dd.BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
+    final = artifact_path(
+        "bloom_index", "retire", dd.BLOOM_INDEX_VERSION, sf_dir, "documents.parquet"
     )
     for fam, residue in dd.BLOOM_FAMILIES:
-        dd._register_bloom_family(spark, sf_dir, final, fam, residue)
+        dd._register_bloom_family(spark, sf_dir, "retire", fam, residue)
     a_dir = _os.path.join(final, "families", "suite_a")
     before = _tree_digest(a_dir)
     # the two-family screen's ledger, as the pre-retire baseline
@@ -1345,7 +1357,7 @@ def test_bloom_registry_retire_semantics(spark, sf_dir, tmp_path, monkeypatch):
         for r in spark.read.parquet(_os.path.join(final, "union_words")).collect()
     }
 
-    dd.retire_bloom_family(spark, sf_dir, final, "suite_b")
+    dd.retire_bloom_family(spark, sf_dir, "retire", "suite_b")
     assert _tree_digest(a_dir) == before, "retire mutated the surviving family"
     with open(_os.path.join(final, "registry_done.json")) as f:
         assert list(_json.load(f)["families"]) == ["suite_a"]
@@ -1384,12 +1396,12 @@ def test_bloom_registry_retire_semantics(spark, sf_dir, tmp_path, monkeypatch):
 
     # (e) idempotent no-op on an absent family
     mtime = _os.path.getmtime(_os.path.join(final, "registry_done.json"))
-    dd.retire_bloom_family(spark, sf_dir, final, "suite_b")
+    dd.retire_bloom_family(spark, sf_dir, "retire", "suite_b")
     assert _os.path.getmtime(_os.path.join(final, "registry_done.json")) == mtime
 
     # (d) the last family is not retirable
     with pytest.raises(ValueError, match="EMPTY registry"):
-        dd.retire_bloom_family(spark, sf_dir, final, "suite_a")
+        dd.retire_bloom_family(spark, sf_dir, "retire", "suite_a")
 
 
 def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypatch):
@@ -1410,16 +1422,11 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
     import pytest
 
     from game_data_etl_pipeline_spark.llmdata import ann_index as ai
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "ann"))
-    monkeypatch.setenv("SPARK_GRAFT_LEX_INDEX_DIR", str(tmp_path / "lex"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index"))
 
-    e2e = _os.path.join(
-        ai._index_root(),
-        f"e2e_v{ai.INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
+    e2e = artifact_path("ann_index", "e2e", ai.INDEX_VERSION, sf_dir, "embeddings.parquet")
     # (a) torn write: the ledger write raises after the survivor
     # rewrite — the staging context must discard everything
     with pytest.MonkeyPatch.context() as mp:
@@ -1606,22 +1613,23 @@ def test_bloom_upsert_tree_idempotent_and_build_count(spark, sf_dir, tmp_path, m
     """ensure_bloom_upsert_tree must be build-once: a second call in
     the same process returns the published tree without rewriting it
     (marker mtime unchanged), and the full-filter artifact it is
-    refereed against is not rebuilt either (the _BLOOM_BUILD_COUNT
+    refereed against is not rebuilt either (the ``artifacts.BUILDS``
     discipline)."""
     import os as _os
 
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata.artifacts import BUILDS
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
     p1 = dd.ensure_bloom_upsert_tree(spark, sf_dir)
     marker = _os.path.join(p1, "upsert_done.json")
     m1 = _os.path.getmtime(marker)
     p2 = dd.ensure_bloom_upsert_tree(spark, sf_dir)
     assert p1 == p2 and _os.path.getmtime(marker) == m1
     dd.build_bloom_index(spark, sf_dir)
-    before = dd._BLOOM_BUILD_COUNT
+    before = BUILDS["bloom_index"]
     SPECS["op_bloom_index_upsert"].fn(spark, sf_dir).collect()
-    assert dd._BLOOM_BUILD_COUNT == before, "upsert op rebuilt the full filter"
+    assert BUILDS["bloom_index"] == before, "upsert op rebuilt the full filter"
 
 
 # (property-based tests live in test_llmdata_properties.py, guarded by
@@ -1697,7 +1705,7 @@ def test_bloom_build_self_heals_stale_geometry(spark, sf_dir, tmp_path, monkeypa
 
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
     stale = dd.bloom_index_dir(sf_dir)
     _os.makedirs(stale)
     with open(_os.path.join(stale, "meta.json"), "w") as f:
@@ -1734,7 +1742,7 @@ def test_bloom_registry_lifecycle_e2e_semantics(spark, sf_dir, tmp_path, monkeyp
     import os as _os
 
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import artifact_path
 
     def _tree_digest(d):
         h = _hashlib.sha256()
@@ -1750,17 +1758,15 @@ def test_bloom_registry_lifecycle_e2e_semantics(spark, sf_dir, tmp_path, monkeyp
     def _pairs(path):
         return {(r.b_id, r.g) for r in spark.read.parquet(path).collect()}
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
-    final = _os.path.join(
-        dd._bloom_root(),
-        f"lifecycle_v{dd.BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom"))
+    final = artifact_path(
+        "bloom_index", "lifecycle", dd.BLOOM_INDEX_VERSION, sf_dir, "documents.parquet"
     )
 
     # (b) prelude: register suite_a alone so its digest brackets the
     # WHOLE rest of the lineage (ensure_* resumes idempotently from
     # this one-family state — registration is its own no-op)
-    dd._register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
+    dd._register_bloom_family(spark, sf_dir, "lifecycle", "suite_a", 0, mod=6)
     a_digest = _tree_digest(_os.path.join(final, "families", "suite_a"))
 
     assert dd.ensure_bloom_lifecycle_demo(spark, sf_dir) == final
@@ -1801,15 +1807,13 @@ def test_bloom_registry_lifecycle_e2e_semantics(spark, sf_dir, tmp_path, monkeyp
     # fabricate it in a FRESH root (marker families match the end state
     # but the preserved union sits BELOW the live one — the direction
     # test is what tells the states apart)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom2"))
-    final2 = _os.path.join(
-        dd._bloom_root(),
-        f"lifecycle_v{dd.BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "bloom2"))
+    final2 = artifact_path(
+        "bloom_index", "lifecycle", dd.BLOOM_INDEX_VERSION, sf_dir, "documents.parquet"
     )
-    dd._register_bloom_family(spark, sf_dir, final2, "suite_a", 0, mod=6)
-    dd._register_bloom_family(spark, sf_dir, final2, "suite_b", 3, mod=12)
-    dd.refresh_bloom_family(spark, sf_dir, final2, "suite_b", 3, mod=6)
+    dd._register_bloom_family(spark, sf_dir, "lifecycle", "suite_a", 0, mod=6)
+    dd._register_bloom_family(spark, sf_dir, "lifecycle", "suite_b", 3, mod=12)
+    dd.refresh_bloom_family(spark, sf_dir, "lifecycle", "suite_b", 3, mod=6)
     partial_union = _words(_os.path.join(final2, "union_prev_words"))
     assert dd.ensure_bloom_lifecycle_demo(spark, sf_dir) == final2
     rebuilt_prev = _words(_os.path.join(final2, "union_prev_words"))

@@ -339,3 +339,29 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
     assert os.path.isfile(
         os.path.join(lex_work, "compacted", ann_index.PURGE_LEDGER)
     )
+
+
+def test_stream_bloom_upsert_survives_epoch_replay(spark, sf_dir, duck, monkeypatch):
+    """Structured Streaming delivers a foreachBatch epoch at least
+    once: after a failure the same epoch id can run again. Replaying
+    epoch 0 must neither fail the stream (its segment write
+    overwrites) nor change the result (the bit_or fold of the appended
+    word deltas is idempotent), so the op still matches its oracle."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from tests.oracle import compare
+
+    deliver = DataStreamWriter.foreachBatch
+
+    def replaying(self, func):
+        def at_least_once(batch_df, epoch_id):
+            func(batch_df, epoch_id)
+            if epoch_id == 0:
+                func(batch_df, epoch_id)
+
+        return deliver(self, at_least_once)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", replaying)
+    spec = SPECS["op_stream_bloom_upsert"]
+    problems = compare(spec.fn(spark, sf_dir), duck.execute(spec.oracle).df(), spec.name)
+    assert not problems, problems
